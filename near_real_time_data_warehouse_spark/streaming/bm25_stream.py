@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.text import bm25_batch_tfdl, bm25_score_with_stats
-from .dedup_stream import _overwrite_epoch, _read_epoch, _run_concurrent
+from ..parallel import run_concurrent
+from .dedup_stream import _overwrite_epoch, _read_epoch
 
 _SCORE_SCHEMA = (
     "query_id long, rank long, doc_id long, score_scaled long, "
@@ -80,7 +81,8 @@ def merge_bm25_batch(
     # independent jobs, submitted concurrently (§2.6); the scores write
     # above stays sequential because it READS these dirs' standing
     # partitions.
-    _run_concurrent(
+    run_concurrent(
+        spark,
         lambda: _overwrite_epoch(
             spark,
             tfdl.groupBy("term").agg(F.count(F.lit(1)).alias("df")),

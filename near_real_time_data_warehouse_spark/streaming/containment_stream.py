@@ -39,7 +39,8 @@ from ..operators.dedup import (
     _shingle_arrays,
     verified_containment_from_arrays,
 )
-from .dedup_stream import _overwrite_epoch, _run_concurrent
+from ..parallel import run_concurrent
+from .dedup_stream import _overwrite_epoch
 
 
 def _verified_pairs(arrs_all: DataFrame, cand: DataFrame) -> DataFrame:
@@ -114,7 +115,8 @@ def merge_containment_batch(
     # overwrite; and the two state writes are independent jobs (§2.6).
     links = _verified_pairs(all_arrs, cand)
 
-    _run_concurrent(
+    run_concurrent(
+        spark,
         lambda: _overwrite_epoch(spark, links, links_dir, epoch_id),
         lambda: _overwrite_epoch(spark, arrs, sh_dir, epoch_id),
     )

@@ -33,15 +33,16 @@ from ..operators.dedup import (
     connected_components,
     merge_components_with_edges,
 )
+from ..parallel import run_concurrent
 
 
 def _overwrite_epoch(spark: SparkSession, df: DataFrame, out_dir: str, epoch_id: int) -> None:
     # partitionOverwriteMode as a PER-WRITE option (takes precedence over
     # the session conf, SPARK-20236 follow-ups) instead of a
-    # set-conf/try/finally toggle: the folds now submit their independent
-    # state writes concurrently (_run_concurrent), and a session-global
-    # toggle would race — one thread's `finally` restoring "static" while
-    # another thread's write is still resolving the mode.
+    # set-conf/try/finally toggle: the folds submit their independent
+    # state writes concurrently (parallel.run_concurrent), and a
+    # session-global toggle would race — one thread's `finally` restoring
+    # "static" while another thread's write is still resolving the mode.
     (
         df.withColumn("_epoch", F.lit(epoch_id))
         .write.mode("overwrite")
@@ -49,23 +50,6 @@ def _overwrite_epoch(spark: SparkSession, df: DataFrame, out_dir: str, epoch_id:
         .partitionBy("_epoch")
         .parquet(out_dir)
     )
-
-
-def _run_concurrent(*thunks) -> None:
-    """Submit independent Spark actions concurrently (opt guide §2.6):
-    a fold's per-epoch state writes are independent jobs once their
-    shared inputs are locally checkpointed, so one write's task tail
-    back-fills with the next write's stages instead of each write paying
-    its own full AQE stage-wave latency in sequence."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    if len(thunks) == 1:
-        thunks[0]()
-        return
-    with ThreadPoolExecutor(len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        for f in futures:
-            f.result()
 
 
 def _read_epoch(
@@ -150,7 +134,8 @@ def merge_dedup_batch(
         # all three state writes read only checkpointed frames (labels'
         # lineage ends in the driver-resolved quotient or a per-round
         # checkpoint) — independent jobs, submitted concurrently (§2.6)
-        _run_concurrent(
+        run_concurrent(
+            spark,
             lambda: _overwrite_epoch(spark, arrs, sh_dir, epoch_id),
             lambda: _overwrite_epoch(spark, batch_bands, bands_dir, epoch_id),
             lambda: labels.write.mode("overwrite").parquet(labels_dir),
@@ -192,7 +177,8 @@ def merge_dedup_batch(
         .unionByName(batch_ids.select("doc_id", F.col("doc_id").alias("label")))
     )
     labels = merge_components_with_edges(current, new_pairs).localCheckpoint(eager=True)
-    _run_concurrent(
+    run_concurrent(
+        spark,
         lambda: _overwrite_epoch(spark, arrs, sh_dir, epoch_id),
         lambda: _overwrite_epoch(spark, batch_bands, bands_dir, epoch_id),
         lambda: labels.write.mode("overwrite").parquet(labels_dir),

@@ -25,7 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.text import dsir_fx, dsir_score_with_stats
-from .dedup_stream import _overwrite_epoch, _read_epoch, _run_concurrent
+from ..parallel import run_concurrent
+from .dedup_stream import _overwrite_epoch, _read_epoch
 
 _SCORE_SCHEMA = "doc_id long, n_features long, score_bits long"
 
@@ -87,7 +88,8 @@ def merge_dsir_batch(
     # the checkpointed fx/batch — independent jobs, submitted
     # concurrently (§2.6); the scores write above stays sequential
     # because it READS these dirs' standing partitions.
-    _run_concurrent(
+    run_concurrent(
+        spark,
         lambda: _overwrite_epoch(
             spark,
             fx.groupBy("bucket", "lang").agg(F.count(F.lit(1)).alias("c")),

@@ -29,7 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.similarity import _assign_lists, _train_centroids_on_sample
-from .dedup_stream import _overwrite_epoch, _run_concurrent
+from ..parallel import run_concurrent
+from .dedup_stream import _overwrite_epoch
 
 
 def _save_centroids(spark: SparkSession, cmat: np.ndarray, path: str) -> None:
@@ -77,7 +78,8 @@ def merge_ivf_batch(
         # the centroid write and the assignment write are independent
         # jobs once cmat is on the driver — submit concurrently (§2.6)
         assigned = _assign_lists(spark, batch, cmat)
-        _run_concurrent(
+        run_concurrent(
+            spark,
             lambda: _save_centroids(spark, cmat, cent_dir),
             lambda: _overwrite_epoch(spark, assigned, assign_dir, epoch_id),
         )

@@ -28,7 +28,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.clustering import _assign_frame, _train_state_on
-from .dedup_stream import _overwrite_epoch, _run_concurrent
+from ..parallel import run_concurrent
+from .dedup_stream import _overwrite_epoch
 
 
 def _save_state(
@@ -80,7 +81,8 @@ def merge_kmeans_batch(
         # the centroid-state write and the assignment write are
         # independent jobs once (ids, m) is on the driver (§2.6)
         assigned = _assign_frame(batch, ids, m)
-        _run_concurrent(
+        run_concurrent(
+            spark,
             lambda: _save_state(spark, ids, m, cent_dir),
             lambda: _overwrite_epoch(spark, assigned, assign_dir, epoch_id),
         )

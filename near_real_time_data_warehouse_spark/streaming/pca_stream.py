@@ -35,7 +35,8 @@ from ..operators.similarity import (
     _pca_eigvec_ints,
     _quantized,
 )
-from .dedup_stream import _overwrite_epoch, _read_epoch, _run_concurrent
+from ..parallel import run_concurrent
+from .dedup_stream import _overwrite_epoch, _read_epoch
 
 _SCORE_SCHEMA = "vec_id long, label long, proj_num long, proj double"
 
@@ -126,7 +127,8 @@ def merge_pca_batch(
     # the projection write reads only the checkpointed batch + driver
     # state, the Gram write only the driver-side partial rows — two
     # independent jobs on different dirs, submitted concurrently (§2.6)
-    _run_concurrent(
+    run_concurrent(
+        spark,
         lambda: _overwrite_epoch(
             spark,
             q.withColumn("v", F.array([F.lit(x).cast("long") for x in v])).select(

@@ -15,7 +15,9 @@ an idempotent sink (foreachBatch alone is at-least-once): dim upserts are
 left-anti (replay-safe) and the fact append overwrites a per-epoch_id
 directory, so a replayed batch rewrites rather than duplicates — vs the
 reference's commit/rollback-per-batch at-least-once (:465-471, T5 in
-SURVEY.md §2.6).
+SURVEY.md §2.6). The loader submits its four writes concurrently; they
+run with the query's job group (parallel.run_concurrent), so stopping
+the query cancels them like any other job of the batch.
 """
 
 from __future__ import annotations
@@ -56,15 +58,10 @@ def run_streaming_etl(
     eviction counters (hybrid_join.py:208,236,354) become observable."""
     cust = read_customer_master(spark, customer_master_path)
     prod = read_product_master(spark, product_master_path)
-    stream = read_transactions(spark, transactions_dir, streaming=True)
-    if max_files_per_trigger is not None:
-        stream = (
-            spark.readStream.format("csv")
-            .option("header", True)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .schema(stream.schema)
-            .load(transactions_dir)
-        )
+    stream = read_transactions(
+        spark, transactions_dir, streaming=True,
+        max_files_per_trigger=max_files_per_trigger,
+    )
     enriched = (
         enrich(stream, cust, prod) if metrics is None
         else enrich_flagged(stream, cust, prod)
@@ -139,15 +136,10 @@ def run_streaming_etl_with_retry(
     change on disk, and this path re-reads them per batch, so an SCD
     update published mid-query flows into the very next batch's
     stream-static join."""
-    stream = read_transactions(spark, transactions_dir, streaming=True)
-    if max_files_per_trigger is not None:
-        stream = (
-            spark.readStream.format("csv")
-            .option("header", True)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .schema(stream.schema)
-            .load(transactions_dir)
-        )
+    stream = read_transactions(
+        spark, transactions_dir, streaming=True,
+        max_files_per_trigger=max_files_per_trigger,
+    )
 
     def sink(batch_df, epoch_id: int) -> None:  # noqa: ANN001
         if on_batch is not None:

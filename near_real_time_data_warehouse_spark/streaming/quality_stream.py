@@ -28,7 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup_stream import _overwrite_epoch, _run_concurrent
+from ..parallel import run_concurrent
+from .dedup_stream import _overwrite_epoch
 
 _PRED_RULES = (
     "l_quantity_between_1_50",
@@ -111,7 +112,8 @@ def merge_quality_batch(
     )
     # both state writes read only the checkpointed batch (+ the static
     # parent) — independent jobs, submitted concurrently (§2.6)
-    _run_concurrent(
+    run_concurrent(
+        spark,
         lambda: _overwrite_epoch(
             spark, _batch_rule_rows(batch, orders), f"{state_dir}/rules", epoch_id
         ),

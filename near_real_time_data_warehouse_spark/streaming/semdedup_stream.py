@@ -43,7 +43,8 @@ from ..operators.clustering import (
     _train_state_on,
 )
 from ..operators.similarity import _quant_np
-from .dedup_stream import _overwrite_epoch, _run_concurrent
+from ..parallel import run_concurrent
+from .dedup_stream import _overwrite_epoch
 from .kmeans_stream import _load_state, _save_state
 
 _PAIR_SCHEMA = "vec_a long, vec_b long, cluster_id long, cosine double"
@@ -245,7 +246,8 @@ def merge_semdedup_batch(
         # write, the member write, and the whole count→pair→write chain
         # are three independent jobs (§2.6) — the shard-count collect
         # now overlaps the other two writes instead of gating them (r14)
-        _run_concurrent(
+        run_concurrent(
+            spark,
             lambda: _save_state(spark, ids, m, cent_dir),
             lambda: _overwrite_epoch(spark, _build_pairs(), pair_dir, epoch_id),
             lambda: _overwrite_cluster_epoch(spark, assigned, mem_dir, epoch_id),

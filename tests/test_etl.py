@@ -281,3 +281,99 @@ def test_streaming_eviction_metric_equals_anti_join(
         b = {tuple(str(v) for v in r) for r in star[name].collect()}
         s = {tuple(str(v) for v in r) for r in streamed[name].collect()}
         assert b == s, f"{name}: metered stream diverges from batch"
+
+
+# --- concurrent star loader ------------------------------------------------
+
+def _one_batch(spark, paths):
+    cust = etl.read_customer_master(spark, str(paths["customer"]))
+    prod = etl.read_product_master(spark, str(paths["product"]))
+    txns = etl.read_transactions(spark, str(paths["transactions"]))
+    return etl.enrich(txns, cust, prod), cust, prod
+
+
+def _star_rows(spark, wh: str) -> dict[str, list[tuple]]:
+    star = etl.read_star(spark, wh)
+    return {
+        name: sorted(tuple(str(v) for v in r) for r in star[name].collect())
+        for name in etl.STAR_TABLES
+    }
+
+
+def _assert_dims_key_unique(spark, wh: str) -> None:
+    star = etl.read_star(spark, wh)
+    for dim, key in (
+        ("customer_dim", "customer_id"),
+        ("product_dim", "product_id"),
+        ("time_dim", "date_id"),
+    ):
+        total = star[dim].count()
+        keys = star[dim].select(key).distinct().count()
+        assert total == keys, f"{dim}: {total} rows, {keys} keys"
+
+
+def test_epoch_replay_into_file_uri_warehouse(spark, paths, tmp_path, monkeypatch):
+    """A ``file://`` warehouse replays as idempotently as a plain path:
+    the dim upserts must see their existing keys (a local-only existence
+    check answers False for a URI and appends every key again), and no
+    directory named after the scheme may appear in the working dir."""
+    monkeypatch.chdir(tmp_path)
+    enriched, cust, prod = _one_batch(spark, paths)
+    wh = (tmp_path / "wh").as_uri()
+    assert wh.startswith("file:///")
+
+    etl.load_star_batch(spark, enriched, cust, prod, wh, epoch_id=0)
+    first = _star_rows(spark, wh)
+    etl.load_star_batch(spark, enriched, cust, prod, wh, epoch_id=0)  # replay
+
+    assert _star_rows(spark, wh) == first
+    _assert_dims_key_unique(spark, wh)
+    assert not (tmp_path / "file:").exists()
+
+
+def test_failed_write_raises_and_epoch_rerun_heals(spark, paths, tmp_path):
+    """One of the four concurrent writes fails (a plain file sits where
+    time_dim belongs): the load raises. Once the fault is gone, re-running
+    the same epoch_id leaves a warehouse equal to a clean single load."""
+    enriched, cust, prod = _one_batch(spark, paths)
+    clean = str(tmp_path / "clean")
+    etl.load_star_batch(spark, enriched, cust, prod, clean, epoch_id=0)
+
+    wh = tmp_path / "faulty"
+    wh.mkdir()
+    blocker = wh / "time_dim"
+    blocker.write_text("not a parquet table\n")
+    with pytest.raises(Exception):
+        etl.load_star_batch(spark, enriched, cust, prod, str(wh), epoch_id=0)
+    # the other writes ran to completion before the failure surfaced
+    assert (wh / "salefact" / "epoch=0").is_dir()
+
+    blocker.unlink()
+    etl.load_star_batch(spark, enriched, cust, prod, str(wh), epoch_id=0)
+    assert _star_rows(spark, str(wh)) == _star_rows(spark, clean)
+    _assert_dims_key_unique(spark, str(wh))
+
+
+def test_load_jobs_run_in_the_callers_job_group(spark, paths, tmp_path):
+    """Every job of a load carries the caller's job group, as it must
+    inside foreachBatch for ``query.stop()`` to cancel in-flight writes."""
+    enriched, cust, prod = _one_batch(spark, paths)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def drain_listener_bus() -> None:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+
+    group = "nrtdw-test-load-star-batch"
+    drain_listener_bus()
+    ungrouped_before = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup(group, "load_star_batch under a job group")
+    try:
+        etl.load_star_batch(spark, enriched, cust, prod, str(tmp_path / "wh"), epoch_id=0)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    drain_listener_bus()
+
+    assert len(tracker.getJobIdsForGroup(group)) >= 4  # one per write at least
+    assert set(tracker.getJobIdsForGroup()) - ungrouped_before == set()
